@@ -909,40 +909,26 @@ def embedding_dup_pairs(
     """
     from apache_cassandra_spark.analytics.similarity import (
         _dot_sql,
+        _ident,
         _norm_sql,
-        dot,
         lsh_bucket_tables,
-        norm,
     )
 
     # norms hoisted into the per-side projections throughout (round 7):
     # cosine() per pair re-runs two interpreted norm folds per pair —
     # measured 3x the per-pair cost on the range_search probe. Same bits:
-    # dot/(na*nb) with the original operand order. With a known fixed
-    # ``dim`` the dot/norm run as codegen'd unrolled chains instead of the
-    # interpreted fold — bit-identical (similarity's SQL-text twins note).
+    # dot/(na*nb) with the original operand order. Rendered as SQL text
+    # to save py4j constructor RPCs (similarity's SQL-text scoring note).
+    vid, vec = _ident(id_col), _ident(vec_col)
+
     def _side(alias_id: str, alias_v: str, alias_n: str) -> DataFrame:
-        if dim is not None:
-            return df.selectExpr(
-                f"{id_col} AS {alias_id}",
-                f"{vec_col} AS {alias_v}",
-                f"{_norm_sql(vec_col, dim)} AS {alias_n}",
-            )
-        return df.select(
-            F.col(id_col).alias(alias_id),
-            F.col(vec_col).alias(alias_v),
-            norm(F.col(vec_col)).alias(alias_n),
+        return df.selectExpr(
+            f"{vid} AS {alias_id}", f"{vec} AS {alias_v}", f"{_norm_sql(vec)} AS {alias_n}"
         )
 
     def _scored(pairs: DataFrame) -> DataFrame:
-        if dim is not None:
-            return pairs.selectExpr(
-                "id_a", "id_b", f"ROUND({_dot_sql('va', 'vb', dim)} / (_na * _nb), 6) AS cos"
-            )
-        return pairs.select(
-            "id_a",
-            "id_b",
-            F.round(dot(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb")), 6).alias("cos"),
+        return pairs.selectExpr(
+            "id_a", "id_b", f"ROUND({_dot_sql('va', 'vb')} / (_na * _nb), 6) AS cos"
         )
 
     if method == "brute":

@@ -1173,7 +1173,7 @@ def q_dedup_embedding_exact(spark, sf_dir):
     """O(n²) baseline at a low threshold — small-sf oracle cross-check for
     the cosine expression itself (not the shipped dedup path)."""
     return dedup.embedding_dup_pairs(
-        load_table(spark, sf_dir, "embeddings"), threshold=0.35, method="brute", dim=_EMB_DIM
+        load_table(spark, sf_dir, "embeddings"), threshold=0.35, method="brute"
     )
 
 
@@ -1858,7 +1858,7 @@ def q_corpus_sample_importance(spark, sf_dir):
 
 def q_sim_topk(spark, sf_dir):
     em = load_table(spark, sf_dir, "embeddings")
-    return similarity.cosine_topk(em, em.where(F.col("vec_id") < 5), k=5, dim=_EMB_DIM)
+    return similarity.cosine_topk(em, em.where(F.col("vec_id") < 5), k=5)
 
 
 def q_embedding_quantize(spark, sf_dir):
@@ -2835,7 +2835,7 @@ def q_sim_range_search(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 5)
-    return range_search(emb, q, threshold=0.2, dim=_EMB_DIM)
+    return range_search(emb, q, threshold=0.2)
 
 
 def q_tpch_q18ish(spark, sf_dir):
@@ -5192,9 +5192,9 @@ def _mutual_knn_edges(spark, sf_dir):
     # the 500-vector universe arrives as ONE parquet split, which would
     # run the entire 500x500 brute-force scoring in a single task —
     # spread restores scan-width parallelism (r14; see cosine_topk)
-    knn = cosine_topk(
-        emb, emb, k=8, dim=_EMB_DIM, spread=spark.sparkContext.defaultParallelism
-    ).select("query_id", "neighbor_id")
+    knn = cosine_topk(emb, emb, k=8, spread=spark.sparkContext.defaultParallelism).select(
+        "query_id", "neighbor_id"
+    )
     rev = knn.select(
         F.col("neighbor_id").alias("query_id"), F.col("query_id").alias("neighbor_id")
     )

@@ -1100,33 +1100,54 @@ def test_clickstream_props_regex_lock(spark):
 
 
 def test_sql_text_twins_bit_identical(spark):
-    """r14 optimization lock: the SQL-text renderings (_dot_sql/_norm_sql/
-    _sub_euclid_sql/lsh_bucket_tables-by-name) must stay BIT-identical to
-    their Column-constructor twins — they exist purely to cut py4j
-    plan-construction RPCs, never to change a double."""
+    """The SQL-text scoring expressions (_dot_sql/_norm_sql/
+    _sub_euclid_raw_sql and the hyperplane signs of lsh_bucket_tables)
+    and the public Column builders dot/norm equal, BIT for bit, a
+    pure-Python fold that adds terms left to right from 0.0 — IEEE
+    doubles make that model exact, so no double may ever change."""
+    import hashlib
     import math
+
+    def fold(terms):
+        acc = 0.0
+        for t in terms:
+            acc = acc + t
+        return acc
+
+    def plane(t, p, dim):
+        return [
+            1.0 if int(hashlib.md5(f"hp:{t}:{p}:{d}".encode()).hexdigest()[0], 16) % 2 == 0 else -1.0
+            for d in range(dim)
+        ]
 
     vals = [
         [0.1, -2.5, 3.75, 1e-7, -0.0, 123456.789, -9.25, 0.333333],
         [1.0, 2.0, -3.0, 4.5, 5.25, -6.125, 7.0, 8.875],
     ]
+    cent = [0.5, -1.5, 2.25, 0.0]
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "vec_id long, embedding array<double>")
-    hof = df.select(
-        similarity.dot(F.col("embedding"), F.col("embedding")).alias("d"),
-        similarity.norm(F.col("embedding")).alias("n"),
-        similarity._sub_euclid(F.slice("embedding", 1, 4), [0.5, -1.5, 2.25, 0.0]).alias("e"),
+    rows = df.select(
+        "vec_id",
+        similarity.dot(F.col("embedding"), F.col("embedding")).alias("col_d"),
+        similarity.norm(F.col("embedding")).alias("col_n"),
+        F.expr(similarity._dot_sql("embedding", "embedding")).alias("d"),
+        F.expr(similarity._norm_sql("embedding")).alias("n"),
+        F.expr(similarity._sub_euclid_raw_sql("slice(embedding, 1, 4)", cent)).alias("e"),
+        similarity.lsh_bucket_tables("embedding", 8, planes=4, tables=3).alias("t"),
     ).collect()
-    sql = df.selectExpr(
-        f"{similarity._dot_sql('embedding', 'embedding')} AS d",
-        f"{similarity._norm_sql('embedding')} AS n",
-        f"{similarity._sub_euclid_sql('slice(embedding, 1, 4)', [0.5, -1.5, 2.25, 0.0])} AS e",
-    ).collect()
-    for a, b in zip(hof, sql):
-        for f in ("d", "n", "e"):
-            assert math.copysign(1.0, a[f]) == math.copysign(1.0, b[f]) and a[f] == b[f], (f, a[f], b[f])
-    by_col = df.select(similarity.lsh_bucket_tables(F.col("embedding"), 8, planes=4, tables=3).alias("t")).collect()
-    by_name = df.select(similarity.lsh_bucket_tables("embedding", 8, planes=4, tables=3).alias("t")).collect()
-    assert [r["t"] for r in by_col] == [r["t"] for r in by_name]
+    assert sorted(r["vec_id"] for r in rows) == [0, 1]
+    for r in rows:
+        v = vals[r["vec_id"]]
+        d = fold(x * x for x in v)
+        e = math.sqrt(fold((x - c) * (x - c) for x, c in zip(v[:4], cent)))
+        want = {"col_d": d, "d": d, "col_n": math.sqrt(d), "n": math.sqrt(d), "e": e}
+        for f, w in want.items():
+            assert math.copysign(1.0, r[f]) == math.copysign(1.0, w) and r[f] == w, (f, r[f], w)
+        buckets = [
+            (t, "".join("1" if fold(x * h for x, h in zip(v, plane(t, p, 8))) >= 0 else "0" for p in range(4)))
+            for t in range(3)
+        ]
+        assert [(b["table"], b["bucket"]) for b in r["t"]] == buckets
 
 
 def test_cosine_topk_spread_matches_unspread(spark):
@@ -1139,11 +1160,31 @@ def test_cosine_topk_spread_matches_unspread(spark):
     base = {tuple(r) for r in similarity.cosine_topk(df, df.where(F.col("vec_id") < 4), k=3).collect()}
     wide = {
         tuple(r)
-        for r in similarity.cosine_topk(
-            df, df.where(F.col("vec_id") < 4), k=3, dim=8, spread=8
-        ).collect()
+        for r in similarity.cosine_topk(df, df.where(F.col("vec_id") < 4), k=3, spread=8).collect()
     }
     assert base == wide
+
+
+def test_vector_scorers_accept_names_needing_quotes(spark):
+    """The scorers render id/vector column names into SQL text; a name
+    with a space or a dot must still address that one column, giving
+    exactly the rows the plain names give."""
+    rows = [(i, [float((i * 5 + j * 3) % 7 - 3) for j in range(8)]) for i in range(24)]
+    plain = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    odd = plain.toDF("vec id", "emb.v 1")
+    kw = {"id_col": "vec id", "vec_col": "emb.v 1"}
+
+    def run(op, df, **extra):
+        return sorted(tuple(r) for r in op(df, df.where(F.col(df.columns[0]) < 4), **extra).collect())
+
+    assert run(similarity.cosine_topk, odd, k=3, **kw) == run(similarity.cosine_topk, plain, k=3)
+    assert run(similarity.range_search, odd, threshold=0.2, **kw) == run(
+        similarity.range_search, plain, threshold=0.2
+    )
+    for method in ("lsh", "brute"):
+        got = dedup.embedding_dup_pairs(odd, threshold=0.5, method=method, dim=8, **kw).collect()
+        want = dedup.embedding_dup_pairs(plain, threshold=0.5, method=method, dim=8).collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
 def test_random_project_preserves_distances_roughly(spark):

@@ -4,8 +4,6 @@ and a spec-worded Python-model fuzz."""
 
 import random
 
-from pyspark.sql import functions as F
-
 from apache_cassandra_spark.analytics import robots
 
 ROBOTS = """\
@@ -110,7 +108,7 @@ def test_regex_metachars_in_rule_paths_are_literal(spark):
 
 
 def _py_canon(s, is_rule=False):
-    """Independent model of robots._pct_canon: the percent-DECODED
+    """Independent model of robots._pct_canon_sql: the percent-DECODED
     comparison space — rule meta '*' (anywhere) and the TRAILING '$'
     anchor ride sentinels through the decode; literal '*'/'$' (a URL's
     raw ones or either side's decoded %2A/%24) land on private literal
@@ -142,9 +140,12 @@ def _py_canon(s, is_rule=False):
 
 
 def _py_match(rule, path):
-    i, parts = 0, rule.rstrip("$").split("*")
     anchored = rule.endswith("$")
-    pos = 0
+    parts = (rule[:-1] if anchored else rule).split("*")
+    if anchored and len(parts) == 1:
+        # no wildcard: the anchored rule must equal the whole path
+        # ('$' matches only the empty path, '/a$' does not match '/a/a')
+        return path == parts[0]
     if not path.startswith(parts[0]):
         return False
     pos = len(parts[0])
@@ -532,7 +533,7 @@ def test_fuzz_matcher_anchored_overlap_adversarial(spark):
         if rnd.random() < 0.5:
             r += "$"
         rules.append((r, rnd.random() < 0.5))
-    paths = ["/" + "".join(rnd.choices("ab", k=rnd.randint(0, 10))) for _ in range(120)]
+    paths = ["/" + "".join(rnd.choices("ab/", k=rnd.randint(0, 10))) for _ in range(120)]
     # evaluate EVERY (rule, path) pair in one frame via a synthetic
     # one-rule-per-domain universe
     rule_rows = [(f"d{i}.com", f"User-agent: *\n{'Allow' if allow else 'Disallow'}: {r}\n")
@@ -553,12 +554,11 @@ def test_fuzz_matcher_anchored_overlap_adversarial(spark):
 
 
 def test_sql_text_twins_match_column_builders(spark):
-    """r14 optimization lock (the similarity-family discipline): the
-    SQL-text renderings _pct_canon_sql/_glob_hit_sql exist purely to cut
-    py4j plan-construction RPCs — they must stay result-identical to
-    their Column-constructor twins on the full hazard alphabet (percent
-    hazards, meta chars, raw/percent-spelled private-use sentinels,
-    malformed triplets, UTF-8 multi-octet, quotes and backslashes)."""
+    """The SQL-text expressions match_allowed runs — _pct_canon_sql and
+    _glob_hit_sql — agree with the independent Python models _py_canon
+    and _py_match on the full hazard alphabet (percent hazards, meta
+    chars, raw/percent-spelled private-use sentinels, malformed
+    triplets, UTF-8 multi-octet, quotes and backslashes)."""
     rnd = random.Random(99)
     atoms = ["a", "b", "%20", " ", "/", "%2F", "%2f", "%61", "é", "%C3%A9",
              "+", "%2B", "~", "%7E", "*", "$", "%24", "%2A", ".", "%z", "%",
@@ -569,24 +569,23 @@ def test_sql_text_twins_match_column_builders(spark):
         [(i, v) for i, v in enumerate(vals)], "i long, s string"
     )
     for is_rule in (False, True):
-        col_form = df.select(
-            "i", robots._pct_canon(F.col("s"), is_rule=is_rule).alias("c")
-        ).collect()
-        sql_form = df.selectExpr(
-            "i", f"{robots._pct_canon_sql('s', is_rule)} AS c"
-        ).collect()
-        a = {r["i"]: r["c"] for r in col_form}
-        b = {r["i"]: r["c"] for r in sql_form}
-        assert a == b, [k for k in a if a[k] != b[k]][:5]
+        got = {
+            r["i"]: r["c"]
+            for r in df.selectExpr("i", f"{robots._pct_canon_sql('s', is_rule)} AS c").collect()
+        }
+        bad = [(vals[i], c) for i, c in got.items() if c != _py_canon(vals[i], is_rule)]
+        assert not bad, (is_rule, bad[:5])
     rules = ["/a", "/a*b", "/a*b$", "/*", "*", "/x*y*z$", "/", "$", "/a$b", "/%2A"]
     pairs = [(p, r) for p in vals[:60] for r in rules]
+    # one-segment anchored rules are whole-path equality, not prefix+suffix
+    pairs += [("/x", "$"), ("/a/a", "/a$"), ("/ab/ab", "/ab$")]
     pdf = spark.createDataFrame(
         [(i, p, r) for i, (p, r) in enumerate(pairs)], "i long, p string, r string"
     )
-    col_form = pdf.select(
-        "i", robots._glob_hit(F.col("p"), F.col("r")).alias("h")
-    ).collect()
-    sql_form = pdf.selectExpr("i", f"({robots._glob_hit_sql('p', 'r')}) AS h").collect()
-    a = {r["i"]: r["h"] for r in col_form}
-    b = {r["i"]: r["h"] for r in sql_form}
-    assert a == b, [(pairs[k], a[k], b[k]) for k in a if a[k] != b[k]][:5]
+    got = {
+        r["i"]: r["h"]
+        for r in pdf.selectExpr("i", f"({robots._glob_hit_sql('p', 'r')}) AS h").collect()
+    }
+    bad = [(pairs[i], h) for i, h in got.items() if h != _py_match(pairs[i][1], pairs[i][0])]
+    assert not bad, bad[:5]
+    assert [got[i] for i in range(len(pairs) - 3, len(pairs))] == [False, False, False]

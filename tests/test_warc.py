@@ -245,3 +245,11 @@ def test_read_wet_stream_matches_batch(spark, tmp_path):
 def test_read_wet_is_map_only(spark, wet_file):
     plan = warc.read_wet(spark, wet_file)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "Join" not in plan
+
+
+@pytest.mark.parametrize("bad", [0, -1])
+def test_read_warc_rejects_bad_num_partitions(spark, tmp_path, bad):
+    """A width below 1 fails up front with the argument named, not
+    inside Spark's repartition."""
+    with pytest.raises(ValueError, match="num_partitions"):
+        warc.read_warc(spark, str(tmp_path), num_partitions=bad)
